@@ -25,6 +25,14 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F  # noqa: N812
 
 
+class CCNotConvergedError(RuntimeError):
+    """Star rounds ran out before a fixpoint: the labels would be partial."""
+
+    def __init__(self, rounds: int, edges: int):
+        super().__init__(f"no CC fixpoint after {rounds} rounds over {edges} edges")
+        self.rounds, self.edges = rounds, edges
+
+
 def build_edges(scored_pairs: DataFrame, min_edge_weight: float = 0.5,
                 decision_threshold: float = 0.9) -> DataFrame:
     """G1: (src, dst, weight) for predicted matches.
@@ -154,7 +162,8 @@ def connected_components(
     scheduling to label a graph that fits in one driver array. The collect
     is bounded by the threshold (~8 MB of Arrow-framed ids at the default —
     measured 2x faster than the distributed rounds even at the full 500k);
-    pass ``driver_threshold=0`` to force the distributed path.
+    pass ``driver_threshold=0`` to force the distributed path, which raises
+    ``CCNotConvergedError`` if ``max_iterations`` rounds reach no fixpoint.
 
     ``canonical_input=True`` skips the orient/dedup pass (one full shuffle
     of the edge set): the caller guarantees no self-loops and no duplicate
@@ -164,7 +173,7 @@ def connected_components(
     undirected).
     """
     spark = edges.sparkSession
-    e = (edges if canonical_input else _canonical(edges)).localCheckpoint(eager=True)
+    e = e_in = (edges if canonical_input else _canonical(edges)).localCheckpoint(eager=True)
     t = edges.schema["src"].dataType.simpleString()
     if e.isEmpty():
         return spark.createDataFrame([], f"node {t}, component {t}")
@@ -212,6 +221,8 @@ def connected_components(
             if e_new.exceptAll(e_prev).isEmpty():
                 break
         prev_sig = sig
+    else:
+        raise CCNotConvergedError(max_iterations, e_in.count())
 
     # at fixpoint every edge is (node -> component root)
     roots = e.select(F.col("dst").alias("node"), F.col("dst").alias("component")).distinct()

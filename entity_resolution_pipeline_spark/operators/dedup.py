@@ -302,7 +302,8 @@ def minhash_signatures(
             )
             yield pa.RecordBatch.from_arrays([ids_col, sig_arr], ["doc_id", "sig"])
 
-    return d.mapInArrow(run, schema="doc_id long, sig array<bigint>")
+    id_t = docs.schema["doc_id"].dataType.simpleString()
+    return d.mapInArrow(run, schema=f"doc_id {id_t}, sig array<bigint>")
 
 
 def _pack_band_lists(mat, bands: int, item_bytes: int):

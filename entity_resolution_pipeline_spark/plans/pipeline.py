@@ -109,9 +109,9 @@ class ERPipeline:
         t0 = time.time()
         df = build_df()
         self.catalog.write(df, out_table)
-        out = self.catalog.read(out_table)
+        out = self.catalog.read(out_table, df.schema)
         wall_ms = int((time.time() - t0) * 1000)
-        self.manifest.record_stage(stage, out, rows_in, wall_ms, input_fp)
+        self.manifest.record_stage(stage, out_table, rows_in, wall_ms, input_fp)
         return out
 
     # ---------- full run ----------
@@ -137,7 +137,7 @@ class ERPipeline:
             self.manifest.record_skipped("preprocess", meta_fp)
             records = self.catalog.read("records")
             input_fp = meta_fp
-            n_pages = int(records.count())
+            n_pages = self.catalog.count("records")
         else:
             # content-sensitive fingerprint: url alone would silently reuse
             # stale records when the same urls arrive with changed text
@@ -185,12 +185,12 @@ class ERPipeline:
             h.unpersist()
         if self.catalog.exists("oversized_blocks"):
             over_df = self.catalog.read("oversized_blocks")
-            self.metrics["oversized_blocks_count"] = int(over_df.count())
+            self.metrics["oversized_blocks_count"] = self.catalog.count("oversized_blocks")
             self.metrics["oversized_blocks"] = [
                 {"key": r["key"], "size": int(r["block_size"])}
                 for r in over_df.orderBy(F.desc("block_size"), "key").limit(100).collect()
             ]
-        n_pairs = pairs.count()
+        n_pairs = self.catalog.count("candidate_pairs")
         self.metrics["candidate_pairs"] = int(n_pairs)
 
         # ---- train classifier on labeled pairs (driver-side, tiny) ----

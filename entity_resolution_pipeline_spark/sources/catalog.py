@@ -15,16 +15,24 @@ checkpoints (/root/reference/src/data_manager.py:60-91,
   partition) with rows_in/rows_out/wall_ms and the stage input fingerprint.
   Stage completion probing (resume) = a manifest read + output-table
   existence check, mirroring /root/reference/src/pipeline.py:230-261.
+  Its bookkeeping launches no Spark job: driver-side pyarrow appends, row
+  counts from the written table's parquet footers, a pyarrow resume probe.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import time
 import uuid
+from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.dataset as ds
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F  # noqa: N812
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     IntegerType,
     LongType,
@@ -47,6 +55,9 @@ MANIFEST_SCHEMA = StructType(
         StructField("committed_at", TimestampType()),
     ]
 )
+_ARROW_MANIFEST = to_arrow_schema(MANIFEST_SCHEMA)
+# Spark names each data file after its write task: part-<task>-<uuid>-c<n>...
+_PART_FILE = re.compile(r"part-(\d+)-.*\.parquet$")
 
 
 class Catalog:
@@ -66,22 +77,35 @@ class Catalog:
             f.endswith(".parquet") or f == "_SUCCESS" for f in os.listdir(p)
         )
 
-    def read(self, name: str) -> DataFrame:
-        return self.spark.read.parquet(self.path(name))
+    def read(self, name: str, schema: StructType | None = None) -> DataFrame:
+        """``schema``, as written, spares the schema-inference job of a read."""
+        reader = self.spark.read if schema is None else self.spark.read.schema(schema)
+        return reader.parquet(self.path(name))
+
+    def partition_rows(self, name: str) -> dict[int, int]:
+        """Rows per write partition (the task number in Spark's ``part-NNNNN-…``
+        file names), summed from parquet footers on the driver: no Spark job."""
+        out: dict[int, int] = {}
+        for r, dirs, fs in os.walk(self.path(name)):
+            dirs[:] = [d for d in dirs if d[0] not in "._"]
+            for m in filter(None, map(_PART_FILE.match, fs)):
+                pid = int(m.group(1))
+                out[pid] = out.get(pid, 0) + pq.read_metadata(os.path.join(r, m.string)).num_rows
+        return out
+
+    def count(self, name: str) -> int:
+        """Row count of an on-disk table from its parquet footers."""
+        return sum(self.partition_rows(name).values())
 
     def write(self, df: DataFrame, name: str, mode: str = "overwrite",
               partition_by: list[str] | None = None, buckets: tuple[int, str] | None = None) -> None:
-        w = df.write.mode(mode)
-        if partition_by:
-            w = w.partitionBy(*partition_by)
         # bucketing needs a metastore table; with the parquet-dir fallback we
         # approximate co-location by repartitioning on the bucket key.
         if buckets:
-            n, col = buckets
-            df = df.repartition(n, col)
-            w = df.write.mode(mode)
-            if partition_by:
-                w = w.partitionBy(*partition_by)
+            df = df.repartition(*buckets)
+        w = df.write.mode(mode)
+        if partition_by:
+            w = w.partitionBy(*partition_by)
         w.parquet(self.path(name))
 
     def write_bucketed_table(self, df: DataFrame, name: str, n_buckets: int,
@@ -109,9 +133,6 @@ class Catalog:
         metadata comes from the session catalog — a plain parquet read of
         the same path would lose it)."""
         return self.spark.table(name)
-
-    def append(self, df: DataFrame, name: str) -> None:
-        df.write.mode("append").parquet(self.path(name))
 
     def _restore_backup(self, name: str) -> None:
         """Recovery preamble for the stage/swap protocol: a crash between
@@ -156,8 +177,8 @@ class Catalog:
         p = self.path(name)
         out: dict[tuple, int] = {}
         for r, _dirs, fs in os.walk(p):
-            pq = [f for f in fs if f.endswith(".parquet")]
-            if not pq:
+            pfiles = [f for f in fs if f.endswith(".parquet")]
+            if not pfiles:
                 continue
             vals = tuple(
                 unquote(seg.split("=", 1)[1])
@@ -166,7 +187,7 @@ class Catalog:
             )
             if len(vals) == n_cols:
                 out[vals] = out.get(vals, 0) + sum(
-                    os.path.getsize(os.path.join(r, f)) for f in pq
+                    os.path.getsize(os.path.join(r, f)) for f in pfiles
                 )
         return out
 
@@ -203,8 +224,6 @@ class Catalog:
             # dir walk already done), joined in via a broadcast map —
             # values already at target size keep salt range 1 (one file),
             # oversized values split into ~target-sized files.
-            from pyspark.sql import functions as F2  # noqa: N812
-
             sizes = self._partition_leaf_sizes(name, len(part_cols))
             tgt = target_file_mb * 1024 * 1024
             splits = {k: max(1, round(b / tgt)) for k, b in sizes.items()}
@@ -229,14 +248,13 @@ class Catalog:
                 # duplicate/drop rows in the staged rewrite that then becomes
                 # canonical after _swap_in. xxhash64 over every column routes a
                 # given row identically on every attempt.
-                data_cols = [c for c in df.columns]
                 df = (
-                    df.join(F2.broadcast(sdf), cond, "left")
+                    df.join(F.broadcast(sdf), cond, "left")
                     .withColumn(
                         "__salt",
-                        F2.pmod(
-                            F2.xxhash64(*data_cols),
-                            F2.coalesce(F2.col("__splits"), F2.lit(1)),
+                        F.pmod(
+                            F.xxhash64(*df.columns),
+                            F.coalesce(F.col("__splits"), F.lit(1)),
                         ),
                     )
                     .repartition(max(n_files, 1), *part_cols, "__salt")
@@ -423,86 +441,54 @@ class Manifest:
         self.catalog = catalog
         self.run_id = run_id or uuid.uuid4().hex[:12]
 
-    def _partition_counts(self, df: DataFrame) -> list[tuple[int, int]]:
-        rows = (
-            df.groupBy(F.spark_partition_id().alias("partition_id"))
-            .count()
-            .collect()
+    def _append(self, rows: list[tuple]) -> None:
+        """Append rows (all columns but ``committed_at``) as ONE parquet
+        file, written on the driver under a hidden temp name and renamed in:
+        a killed append leaves nothing Spark or pyarrow read."""
+        d = self.catalog.path(self.TABLE)
+        os.makedirs(d, exist_ok=True)
+        now = datetime.now(timezone.utc)
+        table = pa.Table.from_pylist(
+            [dict(zip(_ARROW_MANIFEST.names, (*r, now))) for r in rows],
+            schema=_ARROW_MANIFEST,
         )
-        return [(int(r["partition_id"]), int(r["count"])) for r in rows]
+        name = f"manifest-{time.time_ns()}-{uuid.uuid4().hex[:8]}.parquet"
+        tmp = os.path.join(d, f".{name}.tmp")
+        pq.write_table(table, tmp)
+        os.rename(tmp, os.path.join(d, name))
 
-    def record_stage(
-        self,
-        stage: str,
-        df_out: DataFrame,
-        rows_in: int,
-        wall_ms: int,
-        input_fingerprint: str,
-        status: str = "ok",
-    ) -> None:
-        """Append one manifest row per output partition."""
-        parts = self._partition_counts(df_out) or [(0, 0)]
-        now = time.time()
-        pdf_rows = [
-            (
-                self.run_id,
-                stage,
-                pid,
-                status,
-                rows_in,
-                cnt,
-                wall_ms,
-                input_fingerprint,
-            )
+    def record_stage(self, stage: str, out_table: str, rows_in: int, wall_ms: int,
+                     input_fingerprint: str, status: str = "ok") -> None:
+        """One row per write partition of ``out_table``, rows_out from footers."""
+        parts = sorted(self.catalog.partition_rows(out_table).items()) or [(0, 0)]
+        self._append([
+            (self.run_id, stage, pid, status, rows_in, cnt, wall_ms, input_fingerprint)
             for pid, cnt in parts
-        ]
-        df = self.catalog.spark.createDataFrame(
-            [
-                r + (None,)
-                for r in pdf_rows
-            ],
-            schema=MANIFEST_SCHEMA,
-        ).withColumn("committed_at", F.lit(now).cast("timestamp"))
-        self.catalog.append(df, self.TABLE)
+        ])
 
     def record_alias(self, stage: str, input_fingerprint: str) -> None:
         """Record an ALTERNATE fingerprint under which this stage also
         counts complete — e.g. the metadata-level (file-manifest)
         fingerprint alongside the content one, so the next run can skip
         without scanning the input. partition_id -2 marks alias rows."""
-        df = self.catalog.spark.createDataFrame(
-            [(self.run_id, stage, -2, "ok", 0, 0, 0, input_fingerprint, None)],
-            schema=MANIFEST_SCHEMA,
-        ).withColumn("committed_at", F.current_timestamp())
-        self.catalog.append(df, self.TABLE)
+        self._append([(self.run_id, stage, -2, "ok", 0, 0, 0, input_fingerprint)])
 
     def record_skipped(self, stage: str, input_fingerprint: str) -> None:
-        df = self.catalog.spark.createDataFrame(
-            [(self.run_id, stage, -1, "skipped", 0, 0, 0, input_fingerprint, None)],
-            schema=MANIFEST_SCHEMA,
-        ).withColumn("committed_at", F.current_timestamp())
-        self.catalog.append(df, self.TABLE)
+        self._append([(self.run_id, stage, -1, "skipped", 0, 0, 0, input_fingerprint)])
 
     def read(self) -> DataFrame | None:
         if not self.catalog.exists(self.TABLE):
             return None
-        return self.catalog.read(self.TABLE)
+        return self.catalog.read(self.TABLE, MANIFEST_SCHEMA)
 
     def stage_complete(self, stage: str, input_fingerprint: str) -> bool:
         """True when a prior run committed this stage for the same input."""
-        m = self.read()
-        if m is None:
+        p = self.catalog.path(self.TABLE)
+        if not os.path.isdir(p):
             return False
-        n = (
-            m.where(
-                (F.col("stage") == stage)
-                & (F.col("status") == "ok")
-                & (F.col("input_fingerprint") == input_fingerprint)
-            )
-            .limit(1)
-            .count()
-        )
-        return n > 0
+        hit = ((ds.field("stage") == stage) & (ds.field("status") == "ok")
+               & (ds.field("input_fingerprint") == input_fingerprint))
+        return ds.dataset(p, schema=_ARROW_MANIFEST).to_table(["stage"], filter=hit).num_rows > 0
 
 
 def table_diff(df_new, df_old, key_cols: list[str]) -> dict:

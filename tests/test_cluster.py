@@ -65,6 +65,23 @@ def test_cc_signature_collision_cannot_terminate_early(spark, monkeypatch):
     assert set(m.values()) == {"n00"}
 
 
+def test_cc_non_convergence_raises(spark):
+    """Running out of rounds must not return partial labels: a 64-node
+    path needs several star rounds, so one round raises with the round
+    and edge counts, and the default bound labels it fully."""
+    from entity_resolution_pipeline_spark.operators.cluster import CCNotConvergedError
+
+    nodes = [f"n{i:02d}" for i in range(64)]
+    df = spark.createDataFrame(list(zip(nodes, nodes[1:])), "src string, dst string")
+    with pytest.raises(CCNotConvergedError) as exc:
+        connected_components(df, driver_threshold=0, max_iterations=1)
+    assert (exc.value.rounds, exc.value.edges) == (1, 63)
+    m = {r["node"]: r["component"]
+         for r in connected_components(df, driver_threshold=0).collect()}
+    assert set(m) == set(nodes)
+    assert set(m.values()) == {"n00"}
+
+
 def test_cc_empty(spark):
     df = spark.createDataFrame([], "src string, dst string")
     assert connected_components(df).count() == 0

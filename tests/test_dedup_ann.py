@@ -502,6 +502,21 @@ class TestTextStats:
             else:
                 assert got[r["doc_id"]] == expect, r["text"][:40]
 
+    @pytest.mark.parametrize("id_t", ["int", "string"])
+    def test_minhash_signatures_keep_doc_id_type(self, spark, id_t):
+        """The kernel passes doc_id through untouched, so the declared
+        output type must be the input's, not a hard-coded long."""
+        from entity_resolution_pipeline_spark.operators.dedup import minhash_signatures
+
+        base = _docs(spark)
+        docs = base.withColumn("doc_id", F.col("doc_id").cast(id_t))
+        sigs = minhash_signatures(docs, num_perm=8)
+        assert sigs.schema["doc_id"].dataType.simpleString() == id_t
+        got = {str(r["doc_id"]): r["sig"] for r in sigs.collect()}
+        want = {str(r["doc_id"]): r["sig"]
+                for r in minhash_signatures(base, num_perm=8).collect()}
+        assert got == want and len(got) == 5  # the empty doc is dropped
+
     def test_ngram_rarest_token_no_megablock(self, spark):
         """Docs sharing a leading stopword must NOT form one O(B^2) block:
         blocking is on the rarest token, so unrelated docs never pair."""

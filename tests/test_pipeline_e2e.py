@@ -56,6 +56,120 @@ def test_manifest_lineage(pipeline_run):
     assert ok.where(F.col("input_fingerprint").isNull()).count() == 0
 
 
+STAGE_TABLE = {
+    "preprocess": "records", "blocking": "blocking_keys", "pairs": "candidate_pairs",
+    "score": "scored_pairs", "edges": "edges", "cluster": "clusters",
+}
+
+
+def test_manifest_rows_out_exact(pipeline_run):
+    """Footer-derived bookkeeping equals Spark's own counts: per stage, the
+    manifest's rows_out sum is the row count of the table it wrote, and the
+    pair / oversized-block counts match their tables."""
+    pipe, result, *_ = pipeline_run
+    m = pipe.manifest.read().where(
+        (F.col("run_id") == pipe.manifest.run_id) & (F.col("status") == "ok")
+    )
+    got = {r["stage"]: r["n"]
+           for r in m.groupBy("stage").agg(F.sum("rows_out").alias("n")).collect()}
+    assert got == {s: pipe.catalog.read(t).count() for s, t in STAGE_TABLE.items()}
+    assert result["candidate_pairs"] == pipe.catalog.read("candidate_pairs").count()
+    assert (result["metrics"]["oversized_blocks_count"]
+            == pipe.catalog.read("oversized_blocks").count())
+
+
+def test_manifest_bookkeeping_launches_no_spark_job(spark, tmp_path_factory):
+    import uuid
+
+    from entity_resolution_pipeline_spark.sources.catalog import Catalog, Manifest
+
+    cat = Catalog(spark, str(tmp_path_factory.mktemp("erp_wh_nojob")))
+    cat.write(spark.range(50).repartition(3), "out")
+    m = Manifest(cat)
+    sc = spark.sparkContext
+    prefix = uuid.uuid4().hex
+
+    def jobs_of(name, fn):
+        group = f"{prefix}-{name}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            for key in ("spark.jobGroup.id", "spark.job.description"):
+                sc.setLocalProperty(key, None)
+        return sc.statusTracker().getJobIdsForGroup(group)
+
+    assert jobs_of("control", lambda: cat.read("out").count())  # the probe sees jobs
+    calls = [
+        ("probe_without_manifest", lambda: m.stage_complete("s", "fp")),
+        ("record_stage", lambda: m.record_stage("s", "out", 50, 1, "fp")),
+        ("record_alias", lambda: m.record_alias("s", "fp_meta")),
+        ("record_skipped", lambda: m.record_skipped("s", "fp")),
+        ("stage_complete", lambda: m.stage_complete("s", "fp")),
+        ("read", m.read),
+    ]
+    for name, fn in calls:
+        assert jobs_of(name, fn) == [], name
+    assert m.stage_complete("s", "fp") and m.stage_complete("s", "fp_meta")
+    assert not m.stage_complete("s", "other")
+    ok = m.read().where((F.col("status") == "ok") & (F.col("partition_id") >= 0))
+    assert sorted((r["partition_id"], r["rows_out"]) for r in ok.collect()) == sorted(
+        cat.partition_rows("out").items()
+    )
+    assert ok.agg(F.sum("rows_out")).first()[0] == 50
+
+
+def test_manifest_ignores_temp_files_and_reads_legacy_parts(spark, tmp_path_factory):
+    """A killed append leaves only a hidden temp file, which no reader
+    picks up; a manifest written by Spark part files (the former append
+    path) still reads under MANIFEST_SCHEMA and still drives resume."""
+    import os
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from entity_resolution_pipeline_spark.sources.catalog import MANIFEST_SCHEMA
+
+    wh = str(tmp_path_factory.mktemp("erp_wh_legacy"))
+    wp = web_pages_df(spark, 40)
+    lp = spark.createDataFrame(labeled_pairs_pdf(40, 200))
+    pipe = ERPipeline(spark, wh, ERConfig())
+    res1 = pipe.run(wp, lp)
+
+    # rewrite the manifest the way the former code did: Spark part files
+    mdir = pipe.catalog.path(pipe.manifest.TABLE)
+    rows = [tuple(r) for r in spark.read.parquet(mdir).collect()]
+    shutil.rmtree(mdir)
+    spark.createDataFrame(rows, MANIFEST_SCHEMA).write.mode("append").parquet(mdir)
+    assert any(f.startswith("part-") for f in os.listdir(mdir))
+    assert not any(f.startswith("manifest-") for f in os.listdir(mdir))
+
+    # a killed append: a complete file, but still under its hidden temp name
+    fake = pa.Table.from_pylist(
+        [{"run_id": "killed", "stage": "ghost", "partition_id": 0, "status": "ok",
+          "input_fingerprint": "fp_ghost"}],
+        schema=pq.read_schema(os.path.join(mdir, next(
+            f for f in os.listdir(mdir) if f.startswith("part-") and f.endswith(".parquet")
+        ))),
+    )
+    pq.write_table(fake, os.path.join(mdir, ".manifest-killed.parquet.tmp"))
+
+    assert not pipe.manifest.stage_complete("ghost", "fp_ghost")
+    m = pipe.manifest.read()
+    assert m.schema == MANIFEST_SCHEMA
+    assert m.where(F.col("run_id") == "killed").count() == 0
+    assert m.count() == len(rows)
+
+    pipe2 = ERPipeline(spark, wh, ERConfig())
+    res2 = pipe2.run(wp, lp)
+    m2 = pipe2.manifest.read().where(
+        (F.col("run_id") == pipe2.manifest.run_id) & (F.col("status") == "skipped")
+    )
+    assert set(STAGE_TABLE) <= {r["stage"] for r in m2.select("stage").collect()}
+    assert res2["evaluation"] == res1["evaluation"]
+
+
 def test_resume_skips_stages_and_reproduces(pipeline_run, spark):
     pipe, result, wp, lp, wh = pipeline_run
     clusters_before = {
@@ -500,7 +614,7 @@ def test_catalog_compact_small_files(spark, tmp_path_factory):
     cat = Catalog(spark, wh)
     # 12 appends x 4 partitions each -> dozens of tiny files
     for i in range(12):
-        cat.append(spark.range(i * 100, (i + 1) * 100).repartition(4), "frag")
+        cat.write(spark.range(i * 100, (i + 1) * 100).repartition(4), "frag", mode="append")
 
     def count_files(p):
         return sum(1 for _, _, fs in _os.walk(p) for f in fs
